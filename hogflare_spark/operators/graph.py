@@ -122,7 +122,7 @@ def pagerank_fixed_point(
     """
     from pyspark.sql import Observation
 
-    from hogflare_spark.functions.caching import cached
+    from hogflare_spark.functions.caching import cached, release
 
     # Pin the edge list FIRST (r13): the caller's frame is commonly an
     # expensive derivation (q_pagerank_parts: a lineitem self-join +
@@ -206,4 +206,9 @@ def pagerank_fixed_point(
             iterations
         ):
             ranks = ranks.localCheckpoint(eager=True)
+    # the final ranks are a materialized checkpoint: the two per-call
+    # caches are dead here, so release them instead of leaving them to
+    # the host's next global drain
+    release(annotated)
+    release(nodes)
     return ranks

@@ -24,10 +24,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hogflare_spark.schemas import EVENT_COLUMNS
 from hogflare_spark.functions.caching import cached
+from hogflare_spark.operators.person_store import SYNTH_COMPRESS_AFTER
+from hogflare_spark.schemas import EVENT_COLUMNS
 
 DEFAULT_GROUP_TYPES: tuple[str | None, ...] = (None, None, None, None, None)
+
+_SYNTH_EPOCH_MS = 946_684_800_000  # 2000-01-01 UTC, person_store.synthetic_time
+
+
+def synth_time_expr(seq_linear: F.Column) -> F.Column:
+    """JVM twin of person_store.synthetic_time, piecewise boundary
+    included: milliseconds below SYNTH_COMPRESS_AFTER, microseconds past
+    it (keeps 64-bit-scale seq values inside timestamp range and
+    bit-identical with the Python kernel's datetimes)."""
+    boundary_us = (_SYNTH_EPOCH_MS + SYNTH_COMPRESS_AFTER) * 1000
+    return F.when(
+        seq_linear < F.lit(SYNTH_COMPRESS_AFTER),
+        F.timestamp_millis(seq_linear + F.lit(_SYNTH_EPOCH_MS)),
+    ).otherwise(
+        F.timestamp_micros(
+            seq_linear - F.lit(SYNTH_COMPRESS_AFTER) + F.lit(boundary_us)
+        )
+    )
 
 
 def _json_string_literal(col):
@@ -65,16 +84,12 @@ def ingest_commands(
     group_types: tuple[str | None, ...] = DEFAULT_GROUP_TYPES,
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
-    person_fast_path: bool | str = "auto",
-    group_fast_path: bool | str = "auto",
     person_id_floor: int | None = None,
 ) -> dict[str, DataFrame]:
     """Ingest-command rows (normalize.COMMAND_SCHEMA) → governed tables.
 
     Returns {"events": ..., "persons": ..., "groups": ...}. The prior_*
     frames seed the state folds (streaming incremental processing).
-    `person_fast_path` / `group_fast_path` are forwarded to the state
-    folds (see fold_person_state / fold_group_state docs);
     `person_id_floor` lets a caller seeding a slice of the prior persons
     table pin the allocation base to the global max id.
     """
@@ -87,12 +102,9 @@ def ingest_commands(
         commands,
         team_id,
         prior_persons,
-        fast_path=person_fast_path,
         person_id_floor=person_id_floor,
     )
-    group_results, groups_table = fold_group_state(
-        commands, prior_groups, fast_path=group_fast_path
-    )
+    group_results, groups_table = fold_group_state(commands, prior_groups)
 
     seq = ["request_seq", "item_index"]
 
@@ -153,8 +165,6 @@ def ingest_commands(
         )
         ev = ev.withColumn(f"group{i}", F.coalesce(echo_slot, F.col(f"slot{i}")))
 
-    from hogflare_spark.operators.person_fast import synth_time_expr
-
     seq_linear = F.col("request_seq") * F.lit(1_000_000) + F.col("item_index") * F.lit(100)
     events = ev.select(
         # deterministic uuid from the seq pair (divergence: uuid4 in the
@@ -214,8 +224,6 @@ def ingest_raw_requests(
     prior_persons: DataFrame | None = None,
     prior_groups: DataFrame | None = None,
     signing_secret: str | None = None,
-    person_fast_path: bool | str = "auto",
-    group_fast_path: bool | str = "auto",
 ) -> dict[str, DataFrame]:
     """Full path: raw HTTP-shaped rows → {events, persons, groups}.
 
@@ -236,8 +244,6 @@ def ingest_raw_requests(
         group_types=group_types,
         prior_persons=prior_persons,
         prior_groups=prior_groups,
-        person_fast_path=person_fast_path,
-        group_fast_path=group_fast_path,
     )
 
 

@@ -14,11 +14,14 @@ An exact behavioral mirror of the reference's MemoryPersonStore
 - ensure_person: get-or-create + ensure distinct_id
 - resolve: chase redirects (≤10 hops)
 
-This kernel runs inside `applyInPandas` per identity component (see
-person_state.py) — each component is one human's identity cluster, so the
-state here is tiny; Spark shuffles ops to the component's partition and
-the kernel replays them in arrival order, which is exactly the per-key
-serialization the reference gets from Durable Objects (persons.rs:488-541).
+This kernel runs inside the sorted `mapInPandas` replay, one identity
+component at a time (see person_state.py); the streaming state-store lane
+(streaming/ingest_stream.py) applies updates through the same
+`apply_update` / `merged_properties`. Each component is one human's
+identity cluster, so the state here is tiny; Spark shuffles ops to the
+component's partition and the kernel replays them in arrival order,
+which is exactly the per-key serialization the reference gets from
+Durable Objects (persons.rs:488-541).
 
 Determinism (documented divergences, SURVEY.md §7.5): person uuid is
 md5-derived from (component, creating distinct_id, creation seq) instead
@@ -86,6 +89,33 @@ def deterministic_uuid(*parts) -> str:
     )
 
 
+def apply_update(props: dict, set_once: dict, update: dict) -> None:
+    """The $set / $set_once / $unset algebra (persons.rs:55-74), in place:
+    $set overwrites, $set_once writes only when the key is in neither
+    map, $unset removes from both. Every person fold (the batch replay
+    and the streaming state-store lane) applies updates through this."""
+    for k, v in update.get("set", {}).items():
+        props[k] = v
+    for k, v in update.get("set_once", {}).items():
+        if k in props or k in set_once:
+            continue
+        set_once[k] = v
+    for k in update.get("unset", []):
+        props.pop(k, None)
+        set_once.pop(k, None)
+
+
+def merged_properties(props: dict, set_once: dict) -> dict:
+    """persons.rs:112-121 — $set wins over $set_once on read. Key order
+    is part of the serialized snapshot: properties in insertion order,
+    then the set_once-only keys."""
+    out = dict(props)
+    for k, v in set_once.items():
+        if k not in out:
+            out[k] = v
+    return out
+
+
 class PersonRecord:
     __slots__ = (
         "team_id",
@@ -119,15 +149,7 @@ class PersonRecord:
         # persons.rs:55-74
         self.ensure_distinct_id(update["distinct_id"])
         self.version += 1
-        for k, v in update.get("set", {}).items():
-            self.properties[k] = v
-        for k, v in update.get("set_once", {}).items():
-            if k in self.properties or k in self.properties_set_once:
-                continue
-            self.properties_set_once[k] = v
-        for k in update.get("unset", []):
-            self.properties.pop(k, None)
-            self.properties_set_once.pop(k, None)
+        apply_update(self.properties, self.properties_set_once, update)
 
     @staticmethod
     def merge(primary: "PersonRecord", secondary: "PersonRecord") -> "PersonRecord":
@@ -154,12 +176,7 @@ class PersonRecord:
         return merged
 
     def merged_properties(self) -> dict:
-        # persons.rs:112-121 — set wins over set_once
-        out = dict(self.properties)
-        for k, v in self.properties_set_once.items():
-            if k not in out:
-                out[k] = v
-        return out
+        return merged_properties(self.properties, self.properties_set_once)
 
     def clone(self) -> "PersonRecord":
         c = PersonRecord.__new__(PersonRecord)

@@ -139,18 +139,14 @@ DEMOTED_AFTER_GRADING_WINDOW = (
     # BPE merge training (windowed tokenizer trainer), ADC top-k over PQ
     # codes (compressed-domain ANN scoring), and mixture materialization
     # (data-dependent quota sampling) — move INSIDE the 50-entry window
-    # so the driver's hard signal executes them at least once. Four
-    # transitively-covered gates cede their slots:
-    #  - hf_person_fold_fast: JVM twin of the graded hf_person_fold_state
-    #    (same oracle, same rows); differential pytest suite keeps the
-    #    two kernels pinned against each other.
+    # so the driver's hard signal executes them at least once.
+    # Transitively-covered gates cede their slots:
     #  - llm_frame_sample: sibling of the graded llm_multimodal_features
     #    (same mapInPandas decode lane, same fixtures).
     #  - q_unpivot_priority_metrics: stack() projection; the pivot
     #    family keeps ev_event_pivot graded.
     #  - llm_fingerprint_dedup: rolling-hash fingerprint dedup; the
     #    dedup family keeps exact/minhash/ngram/substring graded.
-    "hf_person_fold_fast",
     "llm_frame_sample",
     "q_unpivot_priority_metrics",
     "llm_fingerprint_dedup",

@@ -52,6 +52,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hogflare_spark.operators.person_store import apply_update, merged_properties
 from hogflare_spark.schemas import GROUP_SCHEMA, PERSON_SCHEMA
 from hogflare_spark.functions.caching import cached, unpersist_all
 
@@ -510,7 +511,7 @@ class StreamingIngestJob:
         # outright, so a 1%-alias stream paid a full-corpus fold on
         # every alias-carrying batch (reference semantics pinned by
         # /root/reference/src/persons.rs:281-326).
-        person_fast = (
+        person_delta = (
             self.hybrid
             and p_pointer.get("base") is not None
             and len(p_deltas) < self.max_person_deltas
@@ -518,7 +519,7 @@ class StreamingIngestJob:
         # group ops are ALWAYS per-(type,key) — no cross-key merges exist
         # in the model (groups.rs LWW upserts) — so the delta lane needs
         # only the bootstrap base and the read-amplification cap.
-        group_fast = (
+        group_delta = (
             self.hybrid
             and g_pointer.get("base") is not None
             and len(g_deltas) < self.max_person_deltas
@@ -530,7 +531,7 @@ class StreamingIngestJob:
             spark, "groups", g_pointer, GROUP_SCHEMA, ["group_type", "group_key"]
         )
         seed_persons, floor = prior_persons, None
-        if person_fast:
+        if person_delta:
             # seed only the persons whose distinct_ids this batch touches
             # (alias endpoints included); untouched rows stay in
             # base/deltas and are never replayed.
@@ -550,7 +551,7 @@ class StreamingIngestJob:
             floor = self._max_person_id(spark, p_pointer)
             p_pointer["max_id"] = floor  # pin: commit below reuses it
         seed_groups = prior_groups
-        if group_fast:
+        if group_delta:
             from hogflare_spark.operators.group_state import derive_group_ops
 
             touched_keys = (
@@ -588,7 +589,7 @@ class StreamingIngestJob:
         groups_root = self._state_root("groups")
         if g_applied:
             pass  # already committed before an interleaved writer — no-op
-        elif group_fast:
+        elif group_delta:
             # new_groups holds ONLY touched ∪ newly-created keys here
             new_groups.write.mode("overwrite").parquet(
                 os.path.join(groups_root, f"d={cid}")
@@ -615,7 +616,7 @@ class StreamingIngestJob:
         persons_root = self._state_root("persons")
         if p_applied:
             pass  # already committed before an interleaved writer — no-op
-        elif person_fast:
+        elif person_delta:
             # new_persons holds ONLY affected ∪ newly-created rows here.
             # A seeded canonical_id missing from the fold output was
             # absorbed by a batch merge — write a tombstone (uuid NULL)
@@ -828,16 +829,8 @@ def stateful_person_snapshots(
             for r in pdf.itertuples(index=False):
                 update = json.loads(r.person_update) if r.person_update else {}
                 version += 1
-                for k, v in update.get("set", {}).items():
-                    props[k] = v
-                for k, v in update.get("set_once", {}).items():
-                    if k not in props and k not in set_once:
-                        set_once[k] = v
-                for k in update.get("unset", []):
-                    props.pop(k, None)
-                    set_once.pop(k, None)
-                merged = dict(set_once)
-                merged.update(props)
+                apply_update(props, set_once, update)
+                merged = merged_properties(props, set_once)
                 rows.append(
                     {
                         "request_seq": int(r.request_seq),
@@ -864,112 +857,6 @@ def stateful_person_snapshots(
         _STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_person_snapshots_tws(
-    commands: DataFrame, seed_persons_dir: str | None = None
-) -> DataFrame:
-    """transformWithStateInPandas twin of stateful_person_snapshots
-    (round-11 spike, r10 verdict #8): the same per-distinct_id fold on
-    the forward-looking arbitrary-state API Spark 4.x positions as the
-    applyInPandasWithState successor — named column-family state
-    (getValueState), timer support, and initial-state hooks that the DO
-    model (persons.rs:488-541) maps onto even more directly.
-
-    Identical semantics by construction: the fold body is the same
-    update algebra, state round-trips through the same _STATE_SCHEMA
-    tuple, and tests/test_round11.py pins this twin row-identical to the
-    applyInPandasWithState lane on multi-batch input (including the
-    versioned-state seeding path). The graded gate keeps the
-    applyInPandasWithState lane; switch by calling this function — the
-    signature is identical.
-
-    ENVIRONMENT-BLOCKED in this container (dated note, round 11 /
-    2026-08-16): the TWS Python state server imports google.protobuf at
-    query start and crashes the driver worker without it
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE); protobuf is not
-    bundled here and cannot be installed. The differential tests gate on
-    importorskip("google.protobuf") and activate automatically once the
-    dependency exists.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _PersonFold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("person", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, pdfs, timer_values):
-            import pandas as pd
-
-            (distinct_id,) = key
-            stored = self._state.get() if self._state.exists() else None
-            if stored is not None:
-                props_json, set_once_json, version = stored
-                props = json.loads(props_json or "{}")
-                set_once = json.loads(set_once_json or "{}")
-                version = int(version or 0)
-            else:
-                props, set_once, version = {}, {}, 0
-                if seed_persons_dir is not None:
-                    seeded = _load_person_seed_map(seed_persons_dir).get(
-                        distinct_id
-                    )
-                    if seeded is not None:
-                        props, set_once, version = (
-                            dict(seeded[0]), dict(seeded[1]), seeded[2]
-                        )
-
-            rows = []
-            for pdf in pdfs:
-                pdf = pdf.sort_values(
-                    ["request_seq", "item_index"], kind="mergesort"
-                )
-                for r in pdf.itertuples(index=False):
-                    update = (
-                        json.loads(r.person_update) if r.person_update else {}
-                    )
-                    version += 1
-                    for k, v in update.get("set", {}).items():
-                        props[k] = v
-                    for k, v in update.get("set_once", {}).items():
-                        if k not in props and k not in set_once:
-                            set_once[k] = v
-                    for k in update.get("unset", []):
-                        props.pop(k, None)
-                        set_once.pop(k, None)
-                    merged = dict(set_once)
-                    merged.update(props)
-                    rows.append(
-                        {
-                            "request_seq": int(r.request_seq),
-                            "item_index": int(r.item_index),
-                            "distinct_id": distinct_id,
-                            "person_version": version,
-                            "person_properties": json.dumps(
-                                merged, separators=(",", ":")
-                            ),
-                        }
-                    )
-            self._state.update(
-                (
-                    json.dumps(props, separators=(",", ":")),
-                    json.dumps(set_once, separators=(",", ":")),
-                    version,
-                )
-            )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SNAPSHOT_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return commands.groupBy("distinct_id").transformWithStateInPandas(
-        _PersonFold(), SNAPSHOT_SCHEMA, "append", "none"
     )
 
 

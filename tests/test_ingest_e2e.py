@@ -242,3 +242,36 @@ def test_geo_enrichment_end_to_end(spark):
     props2 = json.loads(events[2]["properties"])
     assert props2["$ip"] == "10.0.0.1"  # payload $ip beats connecting-ip
     assert "$geoip_country_code" not in props2  # no geo bag on this row
+
+
+def test_synth_time_piecewise_matches_python_kernel(spark):
+    """The compressed synthetic-time tail (sf1+ scale ids) must stay in
+    datetime range, stay strictly monotonic across the boundary, and the
+    events frame's JVM expression must match the person kernel
+    bit-for-bit."""
+    from pyspark.sql import functions as F
+
+    from hogflare_spark.operators.ingest import synth_time_expr
+    from hogflare_spark.operators.person_store import (
+        SYNTH_COMPRESS_AFTER,
+        synthetic_time,
+    )
+
+    seqs = [
+        0,
+        946_684_800_000,
+        SYNTH_COMPRESS_AFTER - 1,
+        SYNTH_COMPRESS_AFTER,
+        SYNTH_COMPRESS_AFTER + 1,
+        9 * 10**14,  # the sf1-probe regime that used to overflow
+        2 * 10**17,  # event ids ~2e11
+    ]
+    py = [synthetic_time(s) for s in seqs]
+    assert all(a < b for a, b in zip(py, py[1:]))  # strictly monotonic
+    rows = (
+        spark.createDataFrame([(s,) for s in seqs], "seq long")
+        .select(synth_time_expr(F.col("seq")).alias("t"))
+        .collect()
+    )
+    jvm = [r["t"].replace(tzinfo=py[0].tzinfo) for r in rows]
+    assert jvm == py

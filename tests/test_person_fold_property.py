@@ -113,35 +113,3 @@ def test_distributed_fold_equals_sequential_replay(spark, ops):
         for r in persons
     }
     assert got == want, f"\nops={ops}\ngot={got}\nwant={want}"
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(ops=st.lists(_op, min_size=1, max_size=14))
-def test_forced_jvm_fold_equals_sequential_replay(spark, ops):
-    """The JVM expression fast path (person_fast.py), forced on, must
-    also reproduce the sequential kernel byte-for-byte for arbitrary
-    interleavings — alias-bearing components exercise the automatic
-    per-component fallback inside the forced mode, alias-free ones the
-    pure-expression fold."""
-    from hogflare_spark.operators.ingest import ingest_raw_requests
-
-    want = _sequential_replay(ops)
-
-    raw = spark.createDataFrame(_raw_rows(ops))
-    persons = ingest_raw_requests(raw, person_fast_path=True)["persons"].collect()
-    got = {
-        r["canonical_id"]: {
-            "distinct_ids": sorted(r["distinct_ids"]),
-            "properties": {k: json.loads(v) for k, v in r["properties"].items()},
-            "properties_set_once": {
-                k: json.loads(v) for k, v in r["properties_set_once"].items()
-            },
-            "version": r["version"],
-        }
-        for r in persons
-    }
-    assert got == want, f"\nops={ops}\ngot={got}\nwant={want}"

@@ -153,3 +153,21 @@ def test_alloc_events_order_and_gaps():
 
 def test_snapshot_fields_none():
     assert snapshot_fields(None) == (None, None, None)
+
+
+def test_update_algebra_module_functions_keep_kernel_key_order():
+    """apply_update / merged_properties are the one definition of the
+    algebra every fold lane calls; the merged view lists properties in
+    insertion order, then the set_once-only keys."""
+    from hogflare_spark.operators.person_store import (
+        apply_update,
+        merged_properties,
+    )
+
+    props, set_once = {}, {}
+    apply_update(props, set_once, {"set": {"a": 1}})
+    apply_update(props, set_once, {"set_once": {"a": 9, "b": 2}})
+    assert (props, set_once) == ({"a": 1}, {"b": 2})
+    assert list(merged_properties(props, set_once).items()) == [("a", 1), ("b", 2)]
+    apply_update(props, set_once, {"unset": ["a", "b"], "set_once": {"c": 3}})
+    assert (props, set_once) == ({}, {"c": 3})

@@ -3,7 +3,6 @@ bench error-line capping) and the round's new operators."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -179,7 +178,7 @@ def test_native_flag_responses_plan_is_udf_free(spark):
     assert "ArrowEvalPython" not in plan
 
 
-# ----------------------------------- transformWithState fold twin (spike)
+# ------------------------------------ state-store person fold seeding
 
 
 def _write_json_batch(dirpath, fname, rows):
@@ -212,78 +211,17 @@ def _run_fold_stream(spark, src, ck, fold_fn):
     return out_rows
 
 
-def test_tws_fold_twin_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """The transformWithStateInPandas person fold must be row-identical to
-    the applyInPandasWithState lane across micro-batches (state resume
-    included).
-
-    Skipped where google.protobuf is absent: the TWS state-server wire
-    protocol imports it in the Python driver worker (measured round 11:
-    the query crashes with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    / ImportError google.protobuf), and this container has no protobuf
-    and no way to install one. The twin stays in the tree so the suite
-    activates the moment the environment gains the dependency."""
-    pytest.importorskip("google.protobuf")
-    import json as _json
-
-    from hogflare_spark.streaming.ingest_stream import (
-        stateful_person_snapshots,
-        stateful_person_snapshots_tws,
-    )
-
-    src_a = str(tmp_path / "cmds_a")
-    src_b = str(tmp_path / "cmds_b")
-    batches = [
-        ("c1.json", [
-            {"request_seq": 1, "item_index": 0, "distinct_id": "u1",
-             "person_update": _json.dumps({"set": {"a": 1, "n": "x"}})},
-            {"request_seq": 1, "item_index": 1, "distinct_id": "u1",
-             "person_update": _json.dumps({"set_once": {"a": 9, "b": 2}})},
-            {"request_seq": 2, "item_index": 0, "distinct_id": "u2",
-             "person_update": _json.dumps({"set": {"x": True}})},
-        ]),
-        ("c2.json", [
-            {"request_seq": 3, "item_index": 0, "distinct_id": "u1",
-             "person_update": _json.dumps({"unset": ["a"]})},
-            {"request_seq": 4, "item_index": 0, "distinct_id": "u3",
-             "person_update": _json.dumps({"set_once": {"z": [1, 2]}})},
-        ]),
-    ]
-
-    got = {}
-    for label, src, fn in (
-        ("apply", src_a, stateful_person_snapshots),
-        ("tws", src_b, stateful_person_snapshots_tws),
-    ):
-        rows = []
-        for i, (fname, cmds) in enumerate(batches):
-            _write_json_batch(src, fname, cmds)
-            rows.extend(
-                _run_fold_stream(spark, src, str(tmp_path / f"ck_{label}"), fn)
-            )
-        got[label] = sorted(
-            (r["request_seq"], r["item_index"], r["distinct_id"],
-             r["person_version"], r["person_properties"])
-            for r in rows
-        )
-    assert got["tws"] == got["apply"]
-    assert len(got["tws"]) == 5
-
-
-def test_tws_fold_twin_seeds_from_versioned_state(spark, tmp_path):
-    """The seeding path (first-seen key initialized from the versioned
-    persons table) must behave identically on the TWS lane. (Same
-    protobuf gate as the twin-parity test above.)"""
-    pytest.importorskip("google.protobuf")
+def test_stateful_fold_seeds_from_versioned_state(spark, tmp_path):
+    """A key the state store has never seen initializes from the
+    versioned persons table: the version counter continues and the
+    snapshot serializes in the batch kernel's key order (properties,
+    then the set_once-only keys)."""
     import json as _json
 
     from pyspark.sql import Row
 
     from hogflare_spark.sinks.lake import upsert_table
-    from hogflare_spark.streaming.ingest_stream import (
-        stateful_person_snapshots,
-        stateful_person_snapshots_tws,
-    )
+    from hogflare_spark.streaming.ingest_stream import stateful_person_snapshots
 
     persons_dir = str(tmp_path / "persons")
     seed = spark.createDataFrame([
@@ -291,25 +229,19 @@ def test_tws_fold_twin_seeds_from_versioned_state(spark, tmp_path):
             properties={"a": "7"}, properties_set_once={"b": '"keep"'},
             version=5),
     ])
-    upsert_table(spark, seed, persons_dir, keys=["canonical_id"])
+    upsert_table(spark, seed, persons_dir, key_cols=["canonical_id"])
 
     cmds = [{"request_seq": 1, "item_index": 0, "distinct_id": "u1",
              "person_update": _json.dumps({"set": {"c": 3}})}]
-    got = {}
-    for label, fn in (
-        ("apply", stateful_person_snapshots),
-        ("tws", stateful_person_snapshots_tws),
-    ):
-        src = str(tmp_path / f"cmds_{label}")
-        _write_json_batch(src, "c1.json", cmds)
-        rows = _run_fold_stream(
-            spark, src, str(tmp_path / f"ck_{label}"),
-            lambda df, fn=fn: fn(df, seed_persons_dir=persons_dir),
-        )
-        assert len(rows) == 1
-        got[label] = (rows[0]["person_version"], rows[0]["person_properties"])
-    assert got["tws"] == got["apply"]
-    assert got["tws"][0] == 6  # continues the stored version counter
+    src = str(tmp_path / "cmds")
+    _write_json_batch(src, "c1.json", cmds)
+    rows = _run_fold_stream(
+        spark, src, str(tmp_path / "ck"),
+        lambda df: stateful_person_snapshots(df, seed_persons_dir=persons_dir),
+    )
+    assert len(rows) == 1
+    assert rows[0]["person_version"] == 6  # continues the stored counter
+    assert rows[0]["person_properties"] == '{"a":7,"c":3,"b":"keep"}'
 
 
 # ----------------------------------------------- Misra-Gries heavy hitters
@@ -579,6 +511,28 @@ def test_pagerank_fixed_point_matches_python_reference(spark):
     # the hub dominates every ring node
     assert got[0] == max(got.values())
     assert all(got[0] > got[i] for i in range(1, 7))
+
+
+def test_pagerank_fixed_point_leaves_no_cache_behind(spark):
+    """The edge annotation and node universe are cached for the
+    iterations only: once the ranks are checkpointed, one call plus a
+    collect leaves the count of cached (non-checkpoint) RDDs unchanged."""
+    from hogflare_spark.operators.graph import pagerank_fixed_point
+
+    def cached_rdds():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return sum(
+            1
+            for k in rdds.keySet().toArray()
+            if not rdds.get(k).rdd().isLocallyCheckpointed()
+        )
+
+    df = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (3, 0)], "src long, dst long"
+    )
+    before = cached_rdds()
+    pagerank_fixed_point(df, 3).collect()
+    assert cached_rdds() == before
 
 
 # ------------------------------------------------ incremental KMV sketches

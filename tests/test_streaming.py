@@ -443,6 +443,9 @@ def test_stateful_person_snapshots_operator(spark, tmp_path):
     # post-update snapshots: set wins over set_once; set_once a ignored
     assert json.loads(by_seq[1]["person_properties"]) == {"a": 1}
     assert json.loads(by_seq[2]["person_properties"]) == {"a": 1, "b": 2}
+    # exact bytes: the batch kernel's order — properties, then the
+    # set_once-only keys (person_store.merged_properties)
+    assert by_seq[2]["person_properties"] == '{"a":1,"b":2}'
     assert by_seq[2]["person_version"] == 2
     assert json.loads(by_seq[3]["person_properties"]) == {"x": True}
 
